@@ -112,16 +112,17 @@ def literal_frame(
     rows = list(rows)
     cols = ", ".join(f"`{f.name}`" for f in st.fields)
     if not rows:
+        if not all(f.nullable for f in st.fields):
+            # a typed-NULL row can't carry a non-nullable field, and the
+            # empty RDD costs nothing per action
+            return spark.createDataFrame([], st)
         # zero VALUES rows can't be spelled; a WHERE FALSE over one
         # typed-NULL row optimizes to the same empty LocalRelation
         nulls = ", ".join(
             f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`" for f in st.fields
         )
         return spark.sql(f"SELECT * FROM (SELECT {nulls}) WHERE 1 = 0")
-    vals = ", ".join(
-        "(" + ", ".join(_sql_lit(v, f.dataType) for v, f in zip(r, st.fields)) + ")"
-        for r in rows
-    )
+    lits = [", ".join(_sql_lit(v, f.dataType) for v, f in zip(r, st.fields)) for r in rows]
     # VALUES infers nullable=false from all-non-null literals, but the
     # CALLER's nullability must hold so the frame is a drop-in for the
     # createDataFrame original (schema-equality pins depend on it).  A
@@ -137,13 +138,11 @@ def literal_frame(
             else _sql_lit(v, f.dataType)
             for v, f in zip(rows[0], st.fields)
         )
-        vals += f", ({pad}, false)"
-        sql = (
-            f"SELECT {cols} FROM (SELECT * FROM VALUES "
-            + ", ".join("(" + r[1:-1] + ", true)" for r in _split_rows(vals))
-            + f" AS t({cols}, `__keep`)) WHERE `__keep`"
-        )
-    sql = f"SELECT * FROM VALUES {vals} AS t({cols})"
+        vals = ", ".join(f"({r}, true)" for r in lits) + f", ({pad}, false)"
+        sql = f"SELECT {cols} FROM VALUES {vals} AS t({cols}, `__keep`) WHERE `__keep`"
+    else:
+        vals = ", ".join(f"({r})" for r in lits)
+        sql = f"SELECT * FROM VALUES {vals} AS t({cols})"
     if len(sql) > _MAX_SQL_BYTES:
         return spark.createDataFrame(rows, st)
     return spark.sql(sql)

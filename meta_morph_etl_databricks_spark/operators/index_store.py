@@ -1372,7 +1372,6 @@ def serve_incremental_dedup(
     text_col: str = "text",
     est_threshold: float = 0.8,
     append: bool = True,
-    trace: dict | None = None,
 ) -> IncrementalDedupResult:
     """One increment against the persisted band index, with pruning:
 
@@ -1389,47 +1388,24 @@ def serve_incremental_dedup(
     sized to the corpus, a fixed-size increment touches a fixed number
     of buckets holding a fixed number of rows — serve cost stops
     growing with the corpus (BENCH_SCALE ``incremental_partitioned``
-    measures it across a 10× corpus step).
-
-    ``trace``: when a dict is passed, per-phase wall seconds are
-    recorded into it (keys ``open_live / band_plan / band_touch /
-    tombstones / pruned_plan / policy_plan / append``) — the r13
-    serve-floor profiler's hook (tools/profile_serve.py); zero cost
-    when None."""
-    t = time.time if trace is not None else None
+    measures it across a 10× corpus step)."""
     spark = new_docs.sparkSession
-    t0 = t and t()
     live, meta = _open_live(spark, path, BAND_KIND, "create_band_index")
-    if t:
-        trace["open_live"] = t() - t0
     _check_id_type(new_docs, meta, path)
     id_col, num_hashes, bands = meta["id_col"], meta["num_hashes"], meta["bands"]
     n_buckets = meta["n_buckets"]
 
-    t0 = t and t()
     banded = (
         minhash_band_index(new_docs, text_col, id_col, num_hashes, bands)
         .withColumn("pfx", _band_pfx(n_buckets))
         .persist()
     )
-    if t:
-        trace["band_plan"] = t() - t0
     try:
-        t0 = t and t()
         touched = [r.pfx for r in banded.select("pfx").distinct().collect()]
-        if t:
-            trace["band_touch"] = t() - t0
-            t0 = t()
         tombs = _tombstone_list(spark, live)
-        if t:
-            trace["tombstones"] = t() - t0
-            t0 = t()
         index = _minus_tombstones(
             spark, live, meta, pruned_read(spark, live, _band_schema(meta), touched), tombs
         )
-        if t:
-            trace["pruned_plan"] = t() - t0
-            t0 = t()
         res = incremental_dedup(
             new_docs,
             index.drop("pfx"),
@@ -1441,14 +1417,9 @@ def serve_incremental_dedup(
             index_meta=meta,
             _banded=banded.drop("pfx"),
         )
-        if t:
-            trace["policy_plan"] = t() - t0
-            t0 = t()
         if append:
             # pfx already on the cached rows; locked + swap-aware
             _locked_serve_append(spark, path, live, meta, banded, new_docs, tombs)
-        if t and append:
-            trace["append"] = t() - t0
         return res
     finally:
         banded.unpersist()

@@ -107,8 +107,6 @@ def _hex15_to_bigint(expr: str) -> str:
 # each (every kind covered); residue 7 is the no-PII control — so
 # per-kind counts are pinned to the planting rate (≈1/8 of docs each)
 # and the redacted-text fingerprint hash-gates every replacement byte.
-# tools/gen_scale.py plants the SAME tails into the scale corpora so
-# the 10×/100× audits see the same known rates.
 # (residue, literal prefix, id-derived middle, literal suffix)
 _PII_PLANTS: list[tuple[int, str, str, str]] = [
     (0, " reach user", "id", "@example.com"),
@@ -126,9 +124,8 @@ PII_PLANT_KINDS = ["email", "ipv6", "ipv4", "ssn", "card", "phone_intl", "phone_
 
 
 def pii_plant_tail(id_col: Column) -> Column:
-    """The deterministic planted-PII tail for a document id (Spark) —
-    shared by the declared query and tools/gen_scale.py so test and
-    scale corpora plant at the same known rates."""
+    """The deterministic planted-PII tail for a document id (Spark),
+    so every corpus that plants through it has the same known rates."""
     mids = {
         "id": id_col.cast("string"),
         "mod4": (F.lit(1000) + id_col % 9000).cast("string"),
@@ -1514,9 +1511,11 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         index = _IVF_PQ_IDX_CACHE.get(ikey)
         if index is None:
             index = _IVF_PQ_IDX_CACHE[ikey] = ivf_pq_index(emb, cents, cb).persist()
-        # the declared ivfpq/rerank arms probe ALL nlist lists, so the
-        # full ranked state IS the nprobe=_IVF_K probe slice
-        ps = state.select("query_id", "centroid_id", "_qn", "_lut")
+        # the nprobe=_IVF_K probe slice, explicit rather than relying
+        # on nprobe equalling the centroid count
+        ps = state.where(F.col("_rnk") <= _IVF_K).select(
+            "query_id", "centroid_id", "_qn", "_lut"
+        )
         nom = ivf_pq_topk(
             index, qloc, cents, cb, k=50, nprobe=_IVF_K, exclude_self=True,
             _probe_state=ps, _keep_rank=True,

@@ -27,8 +27,30 @@ _SESSION_TZ = "UTC"
 
 # 16g covers every bench/test working set with headroom; pre-touching
 # (see below) makes startup cost proportional to heap size, so bigger
-# isn't better here.  Env-overridable for larger local experiments.
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+# isn't better here.  A pre-touched Xms=Xmx heap must also FIT: on a
+# 15.7 GiB host a 16g heap fails to map and the JVM never starts.  So
+# the default is a quarter of MemAvailable, floored at 1g and capped at
+# 16g; hosts without /proc/meminfo keep the cap.  Env-overridable.
+_HEAP_CAP_MB = 16 * 1024
+_HEAP_FLOOR_MB = 1024
+
+
+def driver_mem_for(meminfo: str) -> str:
+    """Default driver heap for a host, from the text of /proc/meminfo."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemAvailable:"):
+            mb = int(line.split()[1]) // 1024 // 4
+            return f"{max(_HEAP_FLOOR_MB, min(_HEAP_CAP_MB, mb))}m"
+    return f"{_HEAP_CAP_MB}m"
+
+
+def _default_driver_mem() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    except OSError:
+        meminfo = ""
+    return driver_mem_for(meminfo)
 
 
 def default_parallelism() -> int:
@@ -43,6 +65,7 @@ def get_spark(app_name: str = "meta-morph-spark", master: str | None = None) -> 
     scale-survival layer (BASELINE.md envelope vs 100 TB target).
     """
     cpus = default_parallelism()
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -95,8 +118,8 @@ def get_spark(app_name: str = "meta-morph-spark", master: str | None = None) -> 
         # startup removed the 1.9-29s run-to-run swings (same plan,
         # same data) entirely.  On a real cluster the executor JVMs
         # carry these settings' role.
-        .config("spark.driver.memory", _DRIVER_MEM)
-        .config("spark.driver.extraJavaOptions", f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch")
+        .config("spark.driver.memory", mem)
+        .config("spark.driver.extraJavaOptions", f"-Xms{mem} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

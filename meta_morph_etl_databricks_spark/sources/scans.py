@@ -77,9 +77,11 @@ def _path_signature(path: str) -> tuple[int, int, int] | None:
 # path reads re-pay it per call, so we lift the same per-session
 # memoization to the relation level.  NOT result caching: the cached
 # object is the lazy reader plan; every action still scans the parquet
-# files.  Keyed on (applicationId, path, path SIGNATURE, partitioning
-# args): nothing crosses driver runs, and a rewrite of the path (size/
-# mtime/file-count change) misses the cache and re-lists/re-infers.
+# files.  Keyed on (session, applicationId, path, path SIGNATURE,
+# partitioning args): nothing crosses driver runs or sibling sessions
+# (a newSession() shares the context but not temp views or confs), and
+# a rewrite of the path (size/mtime/file-count change) misses the cache
+# and re-lists/re-infers.
 from collections import OrderedDict as _OrderedDict
 
 _RELATION_CACHE: "_OrderedDict[tuple, DataFrame]" = _OrderedDict()
@@ -129,6 +131,7 @@ def read_parquet_table(
     path = f"{sf_dir}/{name}.parquet"
     sig = _path_signature(path)
     key = (
+        spark,
         spark.sparkContext.applicationId,
         path,
         sig,

@@ -267,7 +267,7 @@ def test_serve_hot_list_plan_is_broadcast_and_correct(spark, tmp_path):
     hot list to a shuffle join — the probe side (queries×nprobe rows)
     is BROADCAST, so the hot list streams through file-split
     parallelism and no single task owns 90% of the rows.  The plan is
-    the guard; tools/bench_scale.bench_ivf_hot_skew measures the hot
+    the guard; BENCH_SCALE.json `ivf_hot_skew` measured the hot
     serve against a natural corpus at the same size/dials.
 
     Deliberately NOT asserted: that a retrain "fixes" the occupancy.
@@ -277,7 +277,7 @@ def test_serve_hot_list_plan_is_broadcast_and_correct(spark, tmp_path):
     cluster legitimately has ~0.9n near neighbors.  The scale-correct
     mitigation is upstream near-dup dedup (the engine's embedding-LSH
     / SemDeDup family); retrain's real job is the GROWTH drift case
-    (test_retrain_matches_fresh_bootstrap, bench_ivf_retrain)."""
+    (test_retrain_matches_fresh_bootstrap; BENCH_SCALE.json `ivf_retrain`)."""
     rng = random.Random(5)
     uniform = [(i, [rng.uniform(-1, 1) for _ in range(DIMS)]) for i in range(24)]
     anchor = uniform[0][1]

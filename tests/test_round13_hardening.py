@@ -1,5 +1,4 @@
-"""Round-13 hardening: the r12 ADVICE items (beyond the bench-gate
-schema change, pinned in test_bench_gate.py) plus round-13 verdict
+"""Round-13 hardening: the r12 ADVICE items plus round-13 verdict
 tasks.
 
 - ``tombstone_ids``/``retract_ids`` validate request ids against the

@@ -161,6 +161,21 @@ def test_relation_cache_hits_and_never_serves_stale(spark, tmp_path):
     assert df4 is not df3 and df4.rdd.getNumPartitions() <= 2
 
 
+def test_relation_cache_is_per_session(spark, tmp_path):
+    """A newSession() sibling shares the SparkContext (same
+    applicationId) but not temp views or SQL confs, so it must get its
+    own relation, bound to itself, not the first session's."""
+    import meta_morph_etl_databricks_spark.sources.scans as scans
+
+    d = str(tmp_path)
+    spark.range(4).selectExpr("id AS a").write.parquet(f"{d}/t.parquet")
+    df1 = scans.read_parquet_table(spark, d, "t")
+    sibling = spark.newSession()
+    df2 = scans.read_parquet_table(sibling, d, "t")
+    assert df2 is not df1 and df2.sparkSession is sibling
+    assert scans.read_parquet_table(sibling, d, "t") is df2  # still cached
+
+
 def test_q_embed_one_collect_path_matches_distributed(spark, monkeypatch):
     """Slot-level pin for the r15 q_embed build restructure: the
     one-collect fast path (full corpus ≤ the driver bound) and the
@@ -215,9 +230,26 @@ def test_literal_frame_roundtrips_exactly(spark):
     got = sorted((key(r) for r in lit.collect()), key=repr)
     want = sorted((key(r) for r in ref.collect()), key=repr)
     assert got == want
+    assert lit.schema == ref.schema
     # empty-rows shape: same schema, zero rows, still local
     e = literal_frame(spark, [], schema)
-    assert e.count() == 0 and [f.dataType for f in e.schema] == [f.dataType for f in ref.schema]
+    assert e.count() == 0 and e.schema == ref.schema
+
+    # non-nullable fields keep the caller's nullability, rows and empty
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    strict = StructType(
+        [StructField("k", LongType(), False), StructField("s", StringType(), True)]
+    )
+    srows = [(1, "a"), (2, None)]
+    slit = literal_frame(spark, srows, strict)
+    assert slit.schema == spark.createDataFrame(srows, strict).schema == strict
+    assert sorted(slit.collect()) == sorted(spark.createDataFrame(srows, strict).collect())
+    assert "LocalTableScan" in slit._jdf.queryExecution().executedPlan().toString()
+    se = literal_frame(spark, [], strict)
+    assert se.count() == 0 and se.schema == spark.createDataFrame([], strict).schema
+    all_strict = StructType([StructField("k", LongType(), False)])
+    assert literal_frame(spark, [(5,)], all_strict).schema == all_strict
 
 
 def test_ivf_serve_state_slices_match_default_paths(spark):
