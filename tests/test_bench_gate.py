@@ -254,40 +254,10 @@ def test_live_repo_gate_is_armed():
     assert bench._baseline_calibration(base) > 0
 
 
-def test_scale10_rows_feed_the_same_regression_gate(tmp_path):
-    """r12 verdict task 5: the HOT-set scale rows ride in the payload's
-    ``scale10`` key and run through the SAME _regressions math as the
-    sf0.1 queries — a 10× plan-shape regression (r11's hyperplane bug
-    class) flags the round instead of waiting for a BENCH_SCALE refresh."""
-    base_scale = {"scale10:embed_lsh_pairs": 10.0, "scale10:serve_incremental": 2.0}
-    # a 10x blow-up (the r11 bug shape) flags...
-    out = bench._regressions(
-        {"scale10:embed_lsh_pairs": 100.0}, base_scale, baseline_round=12
-    )
-    assert out["scale10:embed_lsh_pairs"]["ratio"] == 10.0
-    # ...ordinary jitter does not
-    assert bench._regressions(
-        {"scale10:embed_lsh_pairs": 11.0, "scale10:serve_incremental": 2.4},
-        base_scale,
-        baseline_round=12,
-    ) == {}
-    # the (round, sf) self-history carries the scale rows so the next
-    # round's gate has a baseline for them
-    d = str(tmp_path)
-    _driver_artifact(d, 12)
-    bench._persist_self(
-        {"sf": 0.1, "queries": {"q_a": 1.0}, "scale10": base_scale}, d
-    )
-    _, base = bench._baseline_artifact(d, sf=0.1, current_round=14)
-    assert base["scale10"] == base_scale
-
-
 def test_scale10_compacted_serve_row_is_gated(tmp_path):
-    """r14 verdict task 1: the compacted-serve row rides the same gate.
-    The round it first appears it has no baseline and must not flag
-    (nor crash); once a prior round recorded it, a blow-up — e.g. a
-    compaction layout change that re-fragments buckets, or a pruned-read
-    regression over the compacted store — fails the round."""
+    """A row new to this round (here a formerly recorded scale10 name)
+    has no baseline and must not flag (nor crash); once a prior round
+    recorded it, a blow-up fails the round like any other row."""
     # first appearance: no baseline entry for the new row → silent
     assert bench._regressions(
         {"scale10:serve_compacted": 1.9},
@@ -301,22 +271,3 @@ def test_scale10_compacted_serve_row_is_gated(tmp_path):
     assert bench._regressions({"scale10:serve_compacted": 2.2}, base, baseline_round=14) == {}
     # a failed build (-1 sentinel) degrades to a missing row, never flags
     assert bench._regressions({"scale10:serve_compacted": -1.0}, base, baseline_round=14) == {}
-
-
-def test_scale10_marker_three_state_protocol(tmp_path):
-    """r14 review: an UNREADABLE marker must read as 'skip this
-    section', not 'rebuild' — a persistently unreadable marker
-    otherwise re-runs a minutes-long build every round forever."""
-    m = str(tmp_path / "marker")
-    assert bench._marker_state(m) is False  # missing → rebuild
-    assert bench._marker_write(m, "note")
-    assert bench._marker_state(m) is True  # fresh → reuse
-    with open(m, "w") as f:
-        f.write("v0-ancient: something else")
-    assert bench._marker_state(m) is False  # stale layout → rebuild
-    d = str(tmp_path / "marker_dir")
-    import os
-
-    os.mkdir(d)
-    assert bench._marker_state(d) is None  # unreadable → skip
-    assert bench._marker_write(d, "x") is False  # unwritable → not fresh
